@@ -28,8 +28,6 @@ else carries forward by manifest reference.
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -348,16 +346,6 @@ def merge_batch(
         # (lake/integrity.py) can join the two artifacts precisely
         summary_base["fused_group"] = ",".join(str(b) for b in batch_id)
 
-    debug = os.environ.get("MERGE_DEBUG_TIMING")
-    _t = time.time()
-
-    def _mark(stage):
-        nonlocal _t
-        if debug:
-            now = time.time()
-            print(f"    [merge {batch_id}] {stage}: {now - _t:.2f}s")
-            _t = now
-
     key = table.key
     valid, dead = split_deadletter(batch, patch_ops=patch_ops)
 
@@ -412,7 +400,6 @@ def merge_batch(
     else:
         cand_rows = valid.select(table.bucket_expr(key).alias("b")).distinct().collect()
         cand = sorted(r["b"] for r in cand_rows)
-    _mark("candidates")
 
     def _pre(counts_=None, lineage_rows_=None):
         if pre_commit is not None:
@@ -545,7 +532,6 @@ def merge_batch(
             counts, lineage_rows, max_ts, dirty = _per_bucket_lineage(
                 j, _evt_ts, ("insert", "update", "delete", "patch")
             )
-            _mark("join+action-agg")
         else:
             dirty = list(cand)  # single-pass mode rewrites all candidates
 
@@ -686,7 +672,6 @@ def merge_batch(
         finally:
             if cl_persisted is not None:
                 cl_persisted.unpersist()
-        _mark("transform+write+commit")
         if obs is not None:  # single-pass mode: metrics observed on the write
             counts = observed["counts"]
             summary["max_warc_ts"] = observed["max_warc_ts"]

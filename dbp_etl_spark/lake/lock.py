@@ -29,10 +29,12 @@ as a GENERATIONAL lease:
   the file still carries the token.
 
 Wire it into a table via ``table.lock = FileLockService(dir)`` —
-``_commit`` then serializes its head-check → manifest-create →
-pointer-swing critical section under the lease, giving loser-fails
-semantics even where the manifest store's exclusive create is
-check-then-act. Single-writer deployments need none of this.
+``LakeTable._commit``, the one publish path of every writer, then
+serializes its head-check → manifest-create → pointer-swing critical
+section under the lease and fences on ``validate`` right before the
+manifest create, giving loser-fails semantics even where the manifest
+store's exclusive create is check-then-act. Single-writer
+deployments need none of this.
 
 Reference analog: the reference serializes all applies through one
 controller process (/root/reference/load/DBPLoadController.py:118-141);
@@ -54,7 +56,9 @@ class LockTimeout(RuntimeError):
 
 
 class LockService:
-    """Duck-typed interface (documentation only)."""
+    """Duck-typed interface (documentation only). ``LakeTable._commit``
+    calls all three: acquire, validate just before the manifest create,
+    release."""
 
     def acquire(self, name: str, ttl_sec: float, timeout_sec: float) -> str: ...
     def release(self, name: str, token: str) -> None: ...

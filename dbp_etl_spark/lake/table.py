@@ -394,15 +394,11 @@ class LakeTable:
         bid = batch_id if batch_id is not None else f"add-constraint-{name}-at-{self.snapshot_id}"
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["constraints"] = {**cur, name: expr}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"add_constraint": {name: expr}}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"add_constraint": {name: expr}}, bid, constraints={**cur, name: expr}
+            )
+        )
 
     def drop_constraint(self, name: str, batch_id=None) -> "LakeTable":
         """Remove a CHECK constraint. Unknown names no-op (replay-safe)."""
@@ -414,27 +410,22 @@ class LakeTable:
         bid = batch_id if batch_id is not None else f"drop-constraint-{name}-at-{self.snapshot_id}"
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["constraints"] = {k: v for k, v in cur.items() if k != name}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"drop_constraint": name}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"drop_constraint": name},
+                bid,
+                constraints={k: v for k, v in cur.items() if k != name},
+            )
+        )
 
     def set_stats_columns(self, cols: list[str]) -> "LakeTable":
         """Start recording per-file bounds for ``cols`` on future
         writes (metadata-only commit). Files already written keep no
         bounds and are simply never pruned — conservative by design."""
         ids = self._resolve_stats_cols(self.schema, cols)
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["stats_col_ids"] = ids
-        new_manifest["summary"] = {"stats_columns": list(cols)}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest({"stats_columns": list(cols)}, stats_col_ids=ids)
+        )
 
     @staticmethod
     def _head(fs, root: str) -> tuple[int, dict]:
@@ -1545,11 +1536,48 @@ class LakeTable:
             if fn.endswith(".parquet")
         )
 
+    def _next_manifest(
+        self,
+        summary: dict,
+        batch_id=None,
+        ledger_fields: dict | None = None,
+        ledger: dict | None = None,
+        **fields,
+    ) -> dict:
+        """Build the next snapshot's manifest — the one builder every
+        writer commits through.
+
+        Copies the head manifest, applies ``fields`` as key overrides,
+        advances ``snapshot_id``/``parent_id`` and sets ``summary``.
+        Every member of ``batch_id`` lands in the batch ledger as
+        ``{"snapshot_id": n, **ledger_fields}``: a list id is a fused
+        group commit — all members are recorded in the SAME atomic
+        manifest swing, so replay of any member no-ops (resume
+        granularity = the group). ``batch_id=None`` records nothing.
+        ``ledger`` replaces the head's ledger as the starting point
+        (retention pruning, rollback and WAP publish rewrite it)."""
+        snap_id = self.snapshot_id + 1
+        new_manifest = {
+            **self.manifest,
+            **fields,
+            "snapshot_id": snap_id,
+            "parent_id": self.snapshot_id,
+        }
+        ledger = dict(self.manifest["committed_batches"] if ledger is None else ledger)
+        if batch_id is not None:
+            ids = batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]
+            for b in ids:
+                ledger[str(b)] = {"snapshot_id": snap_id, **(ledger_fields or {})}
+        new_manifest["committed_batches"] = ledger
+        new_manifest["summary"] = summary
+        return new_manifest
+
     def _commit(self, new_manifest: dict) -> "LakeTable":
-        """Commit via exclusive manifest create (the WAL-style commit
+        """Publish ``new_manifest`` — the single commit path of every
+        writer: exclusive create of the manifest (the WAL-style commit
         point), then swing the VERSION pointer.
 
-        Guards: (1) the snapshot check below fast-fails a stale handle;
+        Guards: (1) the head check below fast-fails a stale handle;
         (2) the exclusive create of v{N}.json is the actual arbiter —
         two writers that both pass (1) cannot both publish; the loser
         gets CommitConflict (no lost update). A complete manifest IS a
@@ -1560,10 +1588,12 @@ class LakeTable:
         When ``self.lock`` is set, the whole section additionally runs
         under that lease — required on stores whose exclusive create is
         check-then-act (the head re-check inside the lease then
-        arbitrates; see lake/lock.py).
+        arbitrates; see lake/lock.py) — and the lease is re-validated
+        immediately before the manifest create (fencing).
 
-        Inside a multi-table transaction (lake/txn.py) the commit is
-        STAGED instead: the manifest is appended to the transaction's
+        A WAP branch handle stages the manifest to its branch file
+        instead. Inside a multi-table transaction (lake/txn.py) the
+        commit is STAGED: the manifest is appended to the transaction's
         collected group (published atomically with the other members at
         the transaction's single commit point) and the in-memory handle
         advances so later ops in the same transaction build on it. The
@@ -1590,58 +1620,119 @@ class LakeTable:
             self._txn_collector.append((self.root, new_manifest))
             self.manifest = new_manifest
             return self
-        if self.lock is not None:
-            token = self.lock.acquire("commit")
-            try:
-                # fencing closure: re-validated immediately before the
-                # manifest create, so a holder that stalled past its
-                # lease TTL (GC pause, host CPU steal) aborts instead of
-                # clobbering the successor's commit on a check-then-act
-                # store (see FileLockService.validate).
-                fence = getattr(self.lock, "validate", None)
-                if fence is not None:
-                    return self._commit_unlocked(
-                        new_manifest, fence=lambda: self.lock.validate("commit", token)
-                    )
-                return self._commit_unlocked(new_manifest)
-            finally:
-                self.lock.release("commit", token)
-        return self._commit_unlocked(new_manifest)
-
-    def _commit_unlocked(self, new_manifest: dict, fence=None) -> "LakeTable":
-        meta = os.path.join(self.root, _META)
-        head, _ = LakeTable._head(self._fs, self.root)
-        if head != self.manifest["snapshot_id"]:
-            raise CommitConflict(
-                f"table advanced to snapshot {head} (we hold {self.manifest['snapshot_id']})"
-            )
-        snap_id = new_manifest["snapshot_id"]
-        payload = json.dumps(new_manifest, indent=1)
-        target = os.path.join(meta, f"v{snap_id}.json")
-        if fence is not None and not fence():
-            raise CommitConflict(
-                "commit lease expired or superseded before manifest create; "
-                "a successor may hold the lock — aborting to avoid a lost update"
-            )
+        token = self.lock.acquire("commit") if self.lock is not None else None
         try:
-            self._fs.create_text_exclusive(target, payload)
-        except FileExistsError:
-            # v{N}.json already exists despite the head check. Either a
-            # completed concurrent writer won (its manifest parses ->
-            # CommitConflict, reload to adopt it), or a crashed attempt
-            # left a TORN file mid-create (unparsable -> not a commit:
-            # replace it atomically and proceed; a live mid-create
-            # writer is excluded by the single-writer discipline).
-            try:
-                json.loads(self._fs.read_text(target))
+            meta = os.path.join(self.root, _META)
+            head, _ = LakeTable._head(self._fs, self.root)
+            if head != self.manifest["snapshot_id"]:
                 raise CommitConflict(
-                    f"snapshot {snap_id} already published (reload to adopt it)"
-                ) from None
-            except (ValueError, OSError):
-                self._fs.write_text(target, payload)
-        self._fs.write_text(os.path.join(meta, "VERSION"), str(snap_id))
-        self.manifest = new_manifest
-        return self
+                    f"table advanced to snapshot {head} (we hold {self.manifest['snapshot_id']})"
+                )
+            snap_id = new_manifest["snapshot_id"]
+            payload = json.dumps(new_manifest, indent=1)
+            target = os.path.join(meta, f"v{snap_id}.json")
+            # fencing: a holder that stalled past its lease TTL (GC
+            # pause, host CPU steal) aborts here instead of clobbering
+            # the successor's commit on a check-then-act store (see
+            # FileLockService.validate)
+            if token is not None and not self.lock.validate("commit", token):
+                raise CommitConflict(
+                    "commit lease expired or superseded before manifest create; "
+                    "a successor may hold the lock — aborting to avoid a lost update"
+                )
+            try:
+                self._fs.create_text_exclusive(target, payload)
+            except FileExistsError:
+                # v{N}.json already exists despite the head check. Either a
+                # completed concurrent writer won (its manifest parses ->
+                # CommitConflict, reload to adopt it), or a crashed attempt
+                # left a TORN file mid-create (unparsable -> not a commit:
+                # replace it atomically and proceed; a live mid-create
+                # writer is excluded by the single-writer discipline).
+                try:
+                    json.loads(self._fs.read_text(target))
+                    raise CommitConflict(
+                        f"snapshot {snap_id} already published (reload to adopt it)"
+                    ) from None
+                except (ValueError, OSError):
+                    self._fs.write_text(target, payload)
+            self._fs.write_text(os.path.join(meta, "VERSION"), str(snap_id))
+            self.manifest = new_manifest
+            return self
+        finally:
+            if token is not None:
+                self.lock.release("commit", token)
+
+    def _commit_files(
+        self,
+        df: DataFrame,
+        buckets: list[int],
+        batch_id,
+        summary: dict | None,
+        pre_partitioned: bool,
+        summary_fn,
+        changelog_df: DataFrame | None,
+        delta: bool,
+    ) -> "LakeTable":
+        """Shared body of ``overwrite_buckets`` (``delta=False``: the
+        written buckets' files are replaced) and ``write_deltas``
+        (``delta=True``: every file is kept and the new ones are tagged
+        as deltas): data write → ``summary_fn`` → changelog →
+        stray-bucket check → one ledger-keyed commit."""
+        if self.is_committed(batch_id):
+            return self
+        snap_id = self.snapshot_id + 1
+        ver = self.manifest["schema_version"]
+        new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
+        summary = dict(summary or {})
+        if summary_fn is not None:
+            summary.update(summary_fn())
+        if changelog_df is not None:
+            summary["row_change"] = "log"
+            summary["changelog_files"] = self._write_changelog(changelog_df, snap_id)
+            summary["changelog_schema_version"] = ver
+        bset = set(buckets)
+        stray = {e["bucket"] for e in new_files} - bset
+        if stray:
+            raise ValueError(f"df contains rows for undeclared buckets {sorted(stray)}")
+        if delta:
+            for e in new_files:
+                e["delta"] = True
+                e["seq"] = snap_id
+            kept = self.manifest["files"]
+            # a delta under the old spec re-dirties its bucket's migration
+            # (the flip needs every file new-spec-tagged)
+            written = {e["bucket"] for e in new_files}
+        else:
+            kept = [f for f in self.manifest["files"] if f["bucket"] not in bset]
+            written = bset
+        new_manifest = self._next_manifest(
+            summary,
+            batch_id,
+            # the ledger entry stays lean: changelog file paths live in
+            # the manifest summary (per-snapshot), not in every batch's entry
+            ledger_fields={k: v for k, v in summary.items() if k != "changelog_files"},
+            files=kept + new_files,
+        )
+        self._unmigrate(new_manifest, written)
+        out = self._commit(new_manifest)
+        return out._autocompact() if delta else out
+
+    def _autocompact(self) -> "LakeTable":
+        """Enforce ``max_delta_commits`` after a commit that may add
+        deltas: fold the buckets that reached the bound back into base
+        files right away — ledger-keyed by the snapshot that tripped the
+        bound, so a crash-and-replay is a no-op. (A crash BETWEEN the
+        delta commit and this compaction leaves the bound exceeded by
+        one until the next delta write re-trips it — bounded staleness,
+        not a leak.)"""
+        bound = self.manifest.get("max_delta_commits")
+        if bound is None or self._txn_collector is not None:
+            return self
+        hot = self.hot_buckets(bound)
+        if not hot:
+            return self
+        return self.compact(f"autocompact-{self.snapshot_id}", buckets=hot)
 
     def overwrite_buckets(
         self,
@@ -1671,43 +1762,9 @@ class LakeTable:
         the changelog write but before the commit leaves orphan files
         for ``remove_orphan_files``.
         """
-        if self.is_committed(batch_id):
-            return self
-        snap_id = self.snapshot_id + 1
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
-        if summary_fn is not None:
-            summary = {**(summary or {}), **summary_fn()}
-        if changelog_df is not None:
-            summary = {
-                **(summary or {}),
-                "row_change": "log",
-                "changelog_files": self._write_changelog(changelog_df, snap_id),
-                "changelog_schema_version": ver,
-            }
-        bset = set(buckets)
-        stray = {e["bucket"] for e in new_files} - bset
-        if stray:
-            raise ValueError(f"df contains rows for undeclared buckets {sorted(stray)}")
-        kept = [f for f in self.manifest["files"] if f["bucket"] not in bset]
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = kept + new_files
-        self._unmigrate(new_manifest, bset)
-        ledger = dict(self.manifest["committed_batches"])
-        # a list batch_id = fused group commit: every member id is
-        # recorded in the SAME atomic manifest swing, so replay of any
-        # member no-ops (resume granularity = the group)
-        ids = batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]
-        # the ledger entry stays lean: changelog file paths live in the
-        # manifest summary (per-snapshot), not in every batch's entry
-        lean = {k: v for k, v in (summary or {}).items() if k != "changelog_files"}
-        for b in ids:
-            ledger[str(b)] = {"snapshot_id": snap_id, **lean}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary or {}
-        return self._commit(new_manifest)
+        return self._commit_files(
+            df, buckets, batch_id, summary, pre_partitioned, summary_fn, changelog_df, delta=False
+        )
 
     def write_deltas(
         self,
@@ -1722,7 +1779,8 @@ class LakeTable:
         """Merge-on-read commit: append ``df`` — the CHANGED rows only
         (full-row upserts plus ``_deleted=True`` tombstones) — as
         sequence-numbered DELTA files of ``buckets``. Existing files
-        carry forward by reference; nothing is rewritten.
+        carry forward by reference; nothing is rewritten. Arguments as
+        in ``overwrite_buckets``.
 
         The Hudi-MOR / Iceberg-v2 write primitive: per-batch write cost
         is O(churn) instead of O(dirty-bucket bytes). ``read()``
@@ -1737,54 +1795,9 @@ class LakeTable:
         """
         if not self.manifest.get("merge_on_read"):
             raise ValueError("write_deltas requires a merge_on_read=True table")
-        if self.is_committed(batch_id):
-            return self
-        snap_id = self.snapshot_id + 1
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
-        if summary_fn is not None:
-            summary = {**(summary or {}), **summary_fn()}
-        if changelog_df is not None:
-            summary = {
-                **(summary or {}),
-                "row_change": "log",
-                "changelog_files": self._write_changelog(changelog_df, snap_id),
-                "changelog_schema_version": ver,
-            }
-        bset = set(buckets)
-        stray = {e["bucket"] for e in new_files} - bset
-        if stray:
-            raise ValueError(f"df contains rows for undeclared buckets {sorted(stray)}")
-        for e in new_files:
-            e["delta"] = True
-            e["seq"] = snap_id
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = self.manifest["files"] + new_files
-        # a delta under the old spec re-dirties its bucket's migration
-        # (the flip needs every file new-spec-tagged)
-        self._unmigrate(new_manifest, {e["bucket"] for e in new_files})
-        ledger = dict(self.manifest["committed_batches"])
-        ids = batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]
-        lean = {k: v for k, v in (summary or {}).items() if k != "changelog_files"}
-        for b in ids:
-            ledger[str(b)] = {"snapshot_id": snap_id, **lean}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary or {}
-        out = self._commit(new_manifest)
-        bound = out.manifest.get("max_delta_commits")
-        if bound is not None and out._txn_collector is None:
-            hot = out.hot_buckets(bound)
-            if hot:
-                # fold the buckets that reached the bound back into base
-                # files right away — ledger-keyed by the snapshot that
-                # tripped the bound, so a crash-and-replay is a no-op.
-                # (A crash BETWEEN the delta commit and this compaction
-                # leaves the bound exceeded by one until the next delta
-                # write re-trips it — bounded staleness, not a leak.)
-                out = out.compact(f"autocompact-{out.snapshot_id}", buckets=hot)
-        return out
+        return self._commit_files(
+            df, buckets, batch_id, summary, pre_partitioned, summary_fn, changelog_df, delta=True
+        )
 
     def delta_commit_counts(self) -> dict[int, int]:
         """Per-bucket count of distinct un-compacted delta commits
@@ -1905,18 +1918,13 @@ class LakeTable:
             summary["row_change"] = "log"
             summary["changelog_from_data"] = [e["path"] for e in new_files]
             summary["changelog_schema_version"] = ver
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = self.manifest["files"] + new_files
+        new_manifest = self._next_manifest(
+            summary,
+            batch_id,
+            ledger_fields={k: v for k, v in summary.items() if k != "changelog_from_data"},
+            files=self.manifest["files"] + new_files,
+        )
         self._unmigrate(new_manifest, {e["bucket"] for e in new_files})
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {
-            "snapshot_id": snap_id,
-            **{k: v for k, v in summary.items() if k != "changelog_from_data"},
-        }
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary
         return self._commit(new_manifest)
 
     def create_view(
@@ -2111,16 +2119,14 @@ class LakeTable:
 
     def _evolve(self, new_schema: TableSchema, op: str) -> "LakeTable":
         new_ver = self.manifest["schema_version"] + 1
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["schema_version"] = new_ver
-        schemas = dict(self.manifest["schemas"])
-        schemas[str(new_ver)] = new_schema.to_json()
-        new_manifest["schemas"] = schemas
-        new_manifest["last_column_id"] = max(self.last_column_id, new_schema.max_id())
-        new_manifest["summary"] = {"schema_op": op}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"schema_op": op},
+                schema_version=new_ver,
+                schemas={**self.manifest["schemas"], str(new_ver): new_schema.to_json()},
+                last_column_id=max(self.last_column_id, new_schema.max_id()),
+            )
+        )
 
     def add_column(self, name: str, type_name: str) -> "LakeTable":
         return self._evolve(
@@ -2288,19 +2294,14 @@ class LakeTable:
         )
         ver = self.manifest["schema_version"]
         new_files = self._write_data(rows, snap_id, ver, pre_partitioned=True)
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["num_buckets"] = new_num_buckets
-        new_manifest["files"] = new_files
+        new_manifest = self._next_manifest(
+            {"rebucket": {"from": self.num_buckets, "to": new_num_buckets}},
+            batch_id,
+            num_buckets=new_num_buckets,
+            files=new_files,
+        )
         # a full rewrite supersedes any in-flight incremental migration
         new_manifest.pop("migration", None)
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {"snapshot_id": snap_id}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {
-            "rebucket": {"from": self.num_buckets, "to": new_num_buckets}
-        }
         return self._commit(new_manifest)
 
     # ------------------------------------------- incremental rebucket
@@ -2377,9 +2378,6 @@ class LakeTable:
         tset = set(todo)
         kept = [f for f in self.manifest["files"] if f["bucket"] not in tset]
         done = done | tset
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
         files = kept + new_entries
         # migration complete when every CURRENT bucket's files are
         # new-spec-tagged (buckets written since their migration were
@@ -2390,23 +2388,16 @@ class LakeTable:
             for f in files:
                 f["bucket"] = f.pop("new_bucket")
                 f.pop("new_spec", None)
-            new_manifest["num_buckets"] = new_num_buckets
-            new_manifest.pop("migration", None)
-            new_manifest["summary"] = {
-                "migration_flip": {"from": B, "to": new_num_buckets}
-            }
+            summary = {"migration_flip": {"from": B, "to": new_num_buckets}}
+            layout = {"num_buckets": new_num_buckets}
         else:
-            new_manifest["migration"] = {
-                "to": new_num_buckets,
-                "done": sorted(done),
-            }
-            new_manifest["summary"] = {
-                "migration_step": {"buckets": sorted(tset), "to": new_num_buckets}
-            }
-        new_manifest["files"] = files
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {"snapshot_id": snap_id, **new_manifest["summary"]}
-        new_manifest["committed_batches"] = ledger
+            summary = {"migration_step": {"buckets": sorted(tset), "to": new_num_buckets}}
+            layout = {"migration": {"to": new_num_buckets, "done": sorted(done)}}
+        new_manifest = self._next_manifest(
+            summary, batch_id, ledger_fields=summary, files=files, **layout
+        )
+        if complete:
+            new_manifest.pop("migration", None)
         return self._commit(new_manifest)
 
     def migration_status(self) -> dict | None:
@@ -2567,20 +2558,20 @@ class LakeTable:
                 pruned += 1
             if existing is not None:
                 wm[prefix] = existing
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = head + 1
-        new_manifest["parent_id"] = head
-        new_manifest["committed_batches"] = ledger
-        new_manifest["ledger_watermarks"] = wm
-        new_manifest["min_retained_snapshot"] = min_retained
-        new_manifest["summary"] = {
-            "expire_snapshots": {
-                "keep_last": keep_last,
-                "min_retained": min_retained,
-                "ledger_pruned": pruned,
-            }
-        }
-        self._commit(new_manifest)
+        self._commit(
+            self._next_manifest(
+                {
+                    "expire_snapshots": {
+                        "keep_last": keep_last,
+                        "min_retained": min_retained,
+                        "ledger_pruned": pruned,
+                    }
+                },
+                ledger=ledger,
+                ledger_watermarks=wm,
+                min_retained_snapshot=min_retained,
+            )
+        )
 
         # physical cleanup (idempotent; a crash anywhere re-runs cleanly)
         live: set[str] = self._wap_live_paths()  # staged branches pin files
@@ -3049,15 +3040,9 @@ class LakeTable:
         )
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["tags"] = {**cur, name: snap}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"tag": {name: snap}}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest({"tag": {name: snap}}, bid, tags={**cur, name: snap})
+        )
 
     def untag_snapshot(self, name: str, batch_id=None) -> "LakeTable":
         """Drop a tag (releases its retention pin). Unknown names are a
@@ -3076,15 +3061,7 @@ class LakeTable:
         if self.is_committed(bid):
             return self
         new_tags = {k: v for k, v in cur.items() if k != name}
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["tags"] = new_tags
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"untag": name}
-        return self._commit(new_manifest)
+        return self._commit(self._next_manifest({"untag": name}, bid, tags=new_tags))
 
     # ------------------------------------------------ write-audit-publish
 
@@ -3260,11 +3237,13 @@ class LakeTable:
         }
         if head_id == base_id:
             mode = "fast_forward"
-            new_manifest = {
-                k: v for k, v in staged.items() if not k.startswith("wap_")
+            fields = {
+                k: v
+                for k, v in staged.items()
+                if not k.startswith("wap_")
+                and k not in ("snapshot_id", "parent_id", "committed_batches", "summary")
             }
-            ledger = dict(new_manifest["committed_batches"])
-            ledger.update(new_batches)
+            ledger = staged["committed_batches"]
         else:
             mode = "rebase"
             base_sv = staged["wap_base_schema_version"]
@@ -3300,10 +3279,12 @@ class LakeTable:
                     "WAP branch and main both modified buckets "
                     f"{sorted(int(b) for b in overlap)} since the fork"
                 )
-            new_manifest = dict(head_m)
-            new_manifest["files"] = [
-                f for f in head_m["files"] if str(f["bucket"]) not in touched_branch
-            ] + [f for f in staged["files"] if str(f["bucket"]) in touched_branch]
+            fields = {
+                "files": [
+                    f for f in head_m["files"] if str(f["bucket"]) not in touched_branch
+                ]
+                + [f for f in staged["files"] if str(f["bucket"]) in touched_branch]
+            }
             if branch_evolved:
                 # ONE-sided evolution rebases cleanly: schema changes are
                 # metadata-only (no files move), every file records the
@@ -3311,19 +3292,14 @@ class LakeTable:
                 # side's since-fork files use the base version — still
                 # present in the evolving side's append-only schema map.
                 # Branch evolved => adopt its schema chain over head's.
-                new_manifest["schemas"] = staged["schemas"]
-                new_manifest["schema_version"] = staged["schema_version"]
+                fields["schemas"] = staged["schemas"]
+                fields["schema_version"] = staged["schema_version"]
                 if "last_column_id" in staged:
-                    new_manifest["last_column_id"] = staged["last_column_id"]
-            # main_evolved: dict(head_m) already carries main's chain and
-            # the branch's files project forward by column id as usual
-            ledger = dict(head_m["committed_batches"])
-            ledger.update(new_batches)
-        ledger[bid] = {"snapshot_id": new_id, "wap_id": wap_id}
-        new_manifest["snapshot_id"] = new_id
-        new_manifest["parent_id"] = head_id
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {
+                    fields["last_column_id"] = staged["last_column_id"]
+            # main_evolved: the head's manifest already carries main's
+            # chain and the branch's files project forward by column id
+            ledger = head_m["committed_batches"]
+        summary = {
             "wap_publish": {
                 "wap_id": wap_id,
                 "mode": mode,
@@ -3331,13 +3307,14 @@ class LakeTable:
                 "batches": sorted(new_batches),
             }
         }
-        out = self._commit(new_manifest)
-        bound = out.manifest.get("max_delta_commits")
-        if bound is not None and out._txn_collector is None:
-            hot = out.hot_buckets(bound)
-            if hot:
-                out = out.compact(f"autocompact-{out.snapshot_id}", buckets=hot)
-        return out
+        new_manifest = self._next_manifest(
+            summary,
+            bid,
+            ledger_fields={"wap_id": wap_id},
+            ledger={**ledger, **new_batches},
+            **fields,
+        )
+        return self._commit(new_manifest)._autocompact()
 
     def rollback_to(self, snapshot_id: int, batch_id=None) -> "LakeTable":
         """Restore the table's LOGICAL state to ``snapshot_id`` as a
@@ -3455,33 +3432,26 @@ class LakeTable:
                 "changelog_files": self._write_changelog(cl_df, snap_id),
                 "changelog_schema_version": self.manifest["schema_version"],
             }
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = old["files"]
-        new_manifest["schema_version"] = old["schema_version"]
         # layout is part of the restored state: the target's files carry
         # bucket ids assigned under ITS bucket function — pairing them
         # with a later rebucket's count would corrupt pruning and merges.
         # Ditto any in-flight incremental migration: its progress set
-        # describes the target's files, not the head's
-        new_manifest["num_buckets"] = old["num_buckets"]
-        if "migration" in old:
-            new_manifest["migration"] = old["migration"]
-        else:
-            new_manifest.pop("migration", None)
-        # constraints are logical state too: the restored rows were
-        # validated under the TARGET's constraint set, not the head's
-        if "constraints" in old:
-            new_manifest["constraints"] = old["constraints"]
-        else:
-            new_manifest.pop("constraints", None)
-        ledger = dict(old["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": snap_id}
-        new_manifest["committed_batches"] = ledger
-        if "ledger_watermarks" in old or "ledger_watermarks" in new_manifest:
-            new_manifest["ledger_watermarks"] = old.get("ledger_watermarks") or {}
-        new_manifest["summary"] = summary
+        # describes the target's files, not the head's. Constraints are
+        # logical state too: the restored rows were validated under the
+        # TARGET's constraint set, not the head's
+        restored = {
+            k: old[k]
+            for k in ("files", "schema_version", "num_buckets", "migration", "constraints")
+            if k in old
+        }
+        if "ledger_watermarks" in old or "ledger_watermarks" in self.manifest:
+            restored["ledger_watermarks"] = old.get("ledger_watermarks") or {}
+        new_manifest = self._next_manifest(
+            summary, bid, ledger=old["committed_batches"], **restored
+        )
+        for k in ("migration", "constraints"):
+            if k not in old:
+                new_manifest.pop(k, None)
         return self._commit(new_manifest)
 
     def history(self) -> list[dict]:

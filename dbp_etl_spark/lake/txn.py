@@ -13,9 +13,10 @@ Protocol (write-ahead record + presumed-abort):
 1. **Stage.** Inside ``TxnCoordinator.transaction([...])`` every member
    table's normal write API (append / overwrite_buckets / delete_where
    / update_where / CDCRunner merges) runs as usual — data files are
-   written — but ``_commit`` is intercepted: the new manifest is
-   COLLECTED instead of published, and the in-memory handle advances
-   so later ops in the same transaction build on it.
+   written — but ``LakeTable._commit``, the single publish path every
+   writer goes through, is intercepted: the new manifest is COLLECTED
+   instead of published, and the in-memory handle advances so later
+   ops in the same transaction build on it.
 2. **Commit point.** One exclusive create of
    ``{coord}/txn-{seq}-{id}.json`` embedding EVERY collected manifest.
    Before the record exists, nothing is visible anywhere; after, the
@@ -52,7 +53,8 @@ no staged work is ever thrown away on conflict. Size ``ttl_sec``
 above the longest transaction body; a holder that outlives its lease
 is FENCED — ``validate`` is re-checked immediately before the record
 create, so a stalled coordinator aborts instead of clobbering a
-successor (same guard as LakeTable._commit). The commit point itself
+successor (the same fence LakeTable._commit applies to every
+single-table commit under a lock). The commit point itself
 stays O(members) metadata.
 """
 

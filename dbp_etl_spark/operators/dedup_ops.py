@@ -507,8 +507,10 @@ def _distinct_shingle_postings(
     n consecutive tokens joined with ' ', docs shorter than n tokens
     yield ONE whole-doc shingle, null text yields ''."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     id_type = df.schema[id_col].dataType.simpleString()
+    id_pa = to_arrow_type(df.schema[id_col].dataType)
 
     def batches(it):
         for batch in it:
@@ -539,7 +541,7 @@ def _distinct_shingle_postings(
             if not out_id:
                 continue
             yield pa.record_batch(
-                [pa.array(out_id), pa.array(out_s, type=pa.string())],
+                [pa.array(out_id, type=id_pa), pa.array(out_s, type=pa.string())],
                 names=["_id", "s"],
             )
 
@@ -753,8 +755,10 @@ def _winnow_fingerprints_arrow(
     per-doc distinct = unique selected gram positions (fp is a
     function of pos within a doc)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     id_type = docs.schema[id_col].dataType.simpleString()
+    id_pa = to_arrow_type(docs.schema[id_col].dataType)
 
     def batches(it):
         import hashlib
@@ -792,10 +796,10 @@ def _winnow_fingerprints_arrow(
                 out_pos.append(sel + 1)
                 out_fp.append(hs[sel])
             if not out_id:
-                continue  # empty output batch would carry a null-typed id
+                continue  # np.concatenate needs at least one array
             yield pa.record_batch(
                 [
-                    pa.array(out_id),
+                    pa.array(out_id, type=id_pa),
                     pa.array(np.concatenate(out_pos), type=pa.int32()),
                     pa.array(np.concatenate(out_fp), type=pa.int64()),
                 ],
@@ -874,8 +878,10 @@ def _content_defined_chunks_arrow(
     lane's single (start=1, null, null) row; an empty text emits
     nothing."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     id_type = docs.schema[id_col].dataType.simpleString()
+    id_pa = to_arrow_type(docs.schema[id_col].dataType)
     m = 1 << mask_bits
     fields = "id {}, start int, length int, chunk_hash string".format(id_type)
     if with_text:
@@ -939,7 +945,7 @@ def _content_defined_chunks_arrow(
             if not out_id:
                 continue
             cols = [
-                pa.array(out_id),
+                pa.array(out_id, type=id_pa),
                 pa.array(out_s, type=pa.int32()),
                 pa.array(out_l, type=pa.int32()),
                 pa.array(out_h, type=pa.string()),

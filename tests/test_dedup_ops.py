@@ -95,18 +95,25 @@ def test_winnow_arrow_lane_matches_jvm_lane(spark):
         (5, "tiny"),
         (6, "abcabcabcabcabcabcabc"),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    arrow = {
-        (r["id"], r["pos"], r["fp"])
-        for r in winnow_fingerprints(df, k=5, w=3, hash_fn="md5_60").collect()
-    }
-    jvm = {
-        (r["id"], r["_sel"]["pos"], r["_sel"]["_h"])
-        for r in winnow_fingerprint_arrays(df, k=5, w=3, hash_fn="md5_60")
-        .select("id", F.explode("fps").alias("_sel"))
-        .collect()
-    }
-    assert arrow == jvm
+    # the id column keeps its declared type: a narrow int id and an
+    # all-null id batch must not come back as Arrow int64 / null type
+    for id_type, data in (
+        ("bigint", rows),
+        ("int", rows),
+        ("bigint", [(None, t) for _, t in rows]),
+    ):
+        df = spark.createDataFrame(data, f"doc_id {id_type}, text string")
+        arrow = {
+            (r["id"], r["pos"], r["fp"])
+            for r in winnow_fingerprints(df, k=5, w=3, hash_fn="md5_60").collect()
+        }
+        jvm = {
+            (r["id"], r["_sel"]["pos"], r["_sel"]["_h"])
+            for r in winnow_fingerprint_arrays(df, k=5, w=3, hash_fn="md5_60")
+            .select("id", F.explode("fps").alias("_sel"))
+            .collect()
+        }
+        assert arrow == jvm, id_type
 
 
 # ------------------------------------------------ content-defined chunks
@@ -165,6 +172,11 @@ def test_cdc_chunks_arrow_lane_matches_jvm_lane(spark):
     bit-identical rows the JVM explode lane emits — including null,
     empty, short, constant and unicode texts, and the with_text
     variant."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from dbp_etl_spark.operators import dedup_ops as ops
     from dbp_etl_spark.operators.dedup_ops import content_defined_chunks
 
     rows = [
@@ -175,25 +187,31 @@ def test_cdc_chunks_arrow_lane_matches_jvm_lane(spark):
         (5, "héllo wörld ünïcode çontent " * 8),
         (6, "the quick brown fox jumps over the lazy dog " * 10),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for with_text in (False, True):
-        arrow = sorted(
-            tuple(r)
-            for r in content_defined_chunks(
-                df, hash_fn="md5_60", with_text=with_text
-            ).collect()
-        )
-        # JVM lane: same parameters through the xxhash64-branch
-        # machinery but with the md5-60 hash forced via the private
-        # explode path — reconstruct by calling the JVM builder
-        # directly
-        from dbp_etl_spark.operators import dedup_ops as ops
-
-        jvm_df = ops._content_defined_chunks_jvm(
-            df, "doc_id", "text", 8, 5, "md5_60", with_text
-        )
-        jvm = sorted(tuple(r) for r in jvm_df.collect())
-        assert arrow == jvm, f"with_text={with_text}"
+    # the id column keeps its declared type, including a narrow int id
+    # and an all-null id batch. The JVM lane groups cut positions by id,
+    # so it is a reference for unique ids only: under null ids every
+    # document must chunk exactly as it does under its real id.
+    for id_type, null_ids in (("bigint", False), ("int", False), ("bigint", True)):
+        ref = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+        df = ref.withColumn("doc_id", F.lit(None).cast(id_type)) if null_ids else ref
+        for with_text in (False, True):
+            arrow = Counter(
+                tuple(r)
+                for r in content_defined_chunks(
+                    df, hash_fn="md5_60", with_text=with_text
+                ).collect()
+            )
+            # JVM lane: same parameters through the xxhash64-branch
+            # machinery but with the md5-60 hash forced via the private
+            # explode path — reconstruct by calling the JVM builder
+            # directly
+            jvm_df = ops._content_defined_chunks_jvm(
+                ref, "doc_id", "text", 8, 5, "md5_60", with_text
+            )
+            jvm = Counter(
+                (None, *tuple(r)[1:]) if null_ids else tuple(r) for r in jvm_df.collect()
+            )
+            assert arrow == jvm, f"id {id_type}, null_ids={null_ids}, with_text={with_text}"
 
 
 def test_cdc_chunks_tile_document_exactly(spark):

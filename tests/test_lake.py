@@ -485,3 +485,191 @@ def test_create_view_sql_surface(spark, table):
     t.create_view("pages_v")
     got = spark.sql("SELECT count(*) AS n, count(DISTINCT lang) AS l FROM pages_v").collect()[0]
     assert got["n"] == 5 and got["l"] == 1
+
+
+# ------------------------------------------------ writer output shape pins
+#
+# Every LakeTable writer publishes one manifest. Code outside the writers
+# reads its top-level keys, the ledger entry of the committed batch id(s)
+# (cdc/scd.py, lake/integrity.py, perfbench) and the snapshot summary.
+# Each case returns (table after the write, ledger ids to inspect).
+
+_BASE_KEYS = {
+    "snapshot_id",
+    "parent_id",
+    "key",
+    "num_buckets",
+    "schema_version",
+    "schemas",
+    "files",
+    "committed_batches",
+    "summary",
+    "bloom_key",
+}
+
+
+def _mk(spark, tmp_path, **kw):
+    return LakeTable.create(
+        spark, str(tmp_path / "w"), TableSchema.from_struct(PAGES), key="url", num_buckets=8, **kw
+    )
+
+
+def _seeded(spark, tmp_path, **kw):
+    return _mk(spark, tmp_path, **kw).append(mk_rows(spark, 20), batch_id="seed")
+
+
+def _w_add_constraint(spark, tmp_path):
+    return _seeded(spark, tmp_path).add_constraint("c", "lang IS NOT NULL", batch_id="w"), ["w"]
+
+
+def _w_drop_constraint(spark, tmp_path):
+    t = _seeded(spark, tmp_path, constraints={"c": "lang IS NOT NULL"})
+    return t.drop_constraint("c", batch_id="w"), ["w"]
+
+
+def _w_set_stats_columns(spark, tmp_path):
+    return _seeded(spark, tmp_path).set_stats_columns(["warc_ts"]), []
+
+
+def _w_overwrite_buckets(spark, tmp_path):
+    t = _seeded(spark, tmp_path)
+    return (
+        t.overwrite_buckets(
+            t.read(buckets=[0]), [0], "w", summary={"k": 1}, summary_fn=lambda: {"m": 2}
+        ),
+        ["w"],
+    )
+
+
+def _w_write_deltas(spark, tmp_path):
+    t = _seeded(spark, tmp_path, merge_on_read=True)
+    rows = mk_rows(spark, 20, tag="v2").filter(t.bucket_expr() == 0)
+    return t.write_deltas(rows, [0], "w", summary={"k": 1}, summary_fn=lambda: {"m": 2}), ["w"]
+
+
+def _w_append(spark, tmp_path):
+    return _seeded(spark, tmp_path).append(mk_rows(spark, 5), batch_id="w", summary={"k": 1}), ["w"]
+
+
+def _w_append_list_replay(spark, tmp_path):
+    # a list batch id is a fused group: every member lands in the
+    # ledger, so replaying the group is a no-op
+    t = _seeded(spark, tmp_path).append(mk_rows(spark, 5), batch_id=["a", 7], summary={"k": 1})
+    return t.append(mk_rows(spark, 5), batch_id=["a", 7], summary={"k": 1}), ["a", 7]
+
+
+def _w_evolve(spark, tmp_path):
+    return _seeded(spark, tmp_path).add_column("extra", "string"), []
+
+
+def _w_rebucket(spark, tmp_path):
+    return _seeded(spark, tmp_path).rebucket(4, "w"), ["w"]
+
+
+def _w_migrate_to_buckets(spark, tmp_path):
+    return _seeded(spark, tmp_path).migrate_to_buckets(16, "w"), ["w"]
+
+
+def _w_expire_snapshots(spark, tmp_path):
+    t = _seeded(spark, tmp_path).append(mk_rows(spark, 5, tag="v2"), batch_id="b1")
+    t.expire_snapshots(keep_last=1)
+    return t, []
+
+
+def _w_tag_snapshot(spark, tmp_path):
+    return _seeded(spark, tmp_path).tag_snapshot("t1", batch_id="w"), ["w"]
+
+
+def _w_untag_snapshot(spark, tmp_path):
+    return _seeded(spark, tmp_path).tag_snapshot("t1").untag_snapshot("t1", batch_id="w"), ["w"]
+
+
+def _w_publish_wap(spark, tmp_path):
+    t = _seeded(spark, tmp_path)
+    t.wap_branch("x").append(mk_rows(spark, 5, tag="v2"), batch_id="wb")
+    return t.publish_wap("x", batch_id="w"), ["w"]
+
+
+def _w_rollback_to(spark, tmp_path):
+    t = _seeded(spark, tmp_path).append(mk_rows(spark, 5, tag="v2"), batch_id="b1")
+    return t.rollback_to(1, batch_id="w"), ["w"]
+
+
+def _w_merge_fused(spark, tmp_path):
+    from dbp_etl_spark.cdc import generate_changes, merge_batch
+
+    t = _mk(spark, tmp_path)
+    ev = generate_changes(spark, 60, 12, n_batches=2, seed=5)
+    merge_batch(t, ev, [0, 1])
+    return t, [0, 1]
+
+
+_WRITER_SHAPES = {
+    "add_constraint": (
+        _w_add_constraint,
+        {"constraints"},
+        {"snapshot_id"},
+        {"add_constraint": {"c": "lang IS NOT NULL"}},
+    ),
+    "drop_constraint": (_w_drop_constraint, {"constraints"}, {"snapshot_id"}, {"drop_constraint": "c"}),
+    "set_stats_columns": (_w_set_stats_columns, {"stats_col_ids"}, None, {"stats_columns": ["warc_ts"]}),
+    "overwrite_buckets": (_w_overwrite_buckets, set(), {"snapshot_id", "k", "m"}, {"k": 1, "m": 2}),
+    "write_deltas": (_w_write_deltas, {"merge_on_read"}, {"snapshot_id", "k", "m"}, {"k": 1, "m": 2}),
+    "append": (_w_append, set(), {"snapshot_id", "k"}, {"k": 1}),
+    "append_list_replay": (_w_append_list_replay, set(), {"snapshot_id", "k"}, {"k": 1}),
+    "evolve": (_w_evolve, {"last_column_id"}, None, {"schema_op": "add:extra:string"}),
+    "rebucket": (_w_rebucket, set(), {"snapshot_id"}, {"rebucket": {"from": 8, "to": 4}}),
+    "migrate_to_buckets": (
+        _w_migrate_to_buckets,
+        set(),
+        {"snapshot_id", "migration_flip"},
+        {"migration_flip": {"from": 8, "to": 16}},
+    ),
+    "expire_snapshots": (
+        _w_expire_snapshots,
+        {"ledger_watermarks", "min_retained_snapshot"},
+        None,
+        {"expire_snapshots": {"keep_last": 1, "min_retained": 2, "ledger_pruned": 0}},
+    ),
+    "tag_snapshot": (_w_tag_snapshot, {"tags"}, {"snapshot_id"}, {"tag": {"t1": 1}}),
+    "untag_snapshot": (_w_untag_snapshot, {"tags"}, {"snapshot_id"}, {"untag": "t1"}),
+    "publish_wap": (
+        _w_publish_wap,
+        set(),
+        {"snapshot_id", "wap_id"},
+        {
+            "wap_publish": {
+                "wap_id": "x",
+                "mode": "fast_forward",
+                "buckets": [0, 1, 2, 4],
+                "batches": ["wb"],
+            }
+        },
+    ),
+    "rollback_to": (_w_rollback_to, set(), {"snapshot_id"}, {"rollback_to": 1}),
+    "merge_fused": (
+        _w_merge_fused,
+        set(),
+        {"snapshot_id", "fused_group", "counts", "max_warc_ts", "dirty_buckets", "candidate_buckets"},
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITER_SHAPES))
+def test_writer_manifest_shape(spark, tmp_path, writer):
+    build, extra_keys, entry_keys, summary = _WRITER_SHAPES[writer]
+    t, ids = build(spark, tmp_path)
+    head = LakeTable.load(spark, t.root)
+    assert head.manifest == t.manifest
+    m = t.manifest
+    assert m["parent_id"] == m["snapshot_id"] - 1
+    assert set(m) == _BASE_KEYS | extra_keys, sorted(m)
+    for b in ids:
+        assert set(m["committed_batches"][str(b)]) == entry_keys
+        assert m["committed_batches"][str(b)]["snapshot_id"] == m["snapshot_id"]
+    if summary is not None:
+        assert m["summary"] == summary
+    else:  # merge: the ledger entry is the summary plus the snapshot id
+        assert set(m["summary"]) == entry_keys - {"snapshot_id"}
+

@@ -107,20 +107,27 @@ def test_shingle_postings_arrow_matches_jvm(spark):
         (6, "a  b c "),
         (7, "x y z x y z x y z"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (1, 2, 3):
-        arrow = {
-            (r["_id"], r["s"])
-            for r in _distinct_shingle_postings(df, "doc_id", "text", n).collect()
-        }
-        jvm = {
-            (r["doc_id"], r["s"])
-            for r in df.select(
-                "doc_id",
-                F.explode(F.array_distinct(_shingles("text", n))).alias("s"),
-            ).collect()
-        }
-        assert arrow == jvm, f"n={n}"
+    # the id column keeps its declared type, including a narrow int id
+    # and an all-null id batch
+    for id_type, data in (
+        ("long", rows),
+        ("int", rows),
+        ("long", [(None, t) for _, t in rows]),
+    ):
+        df = spark.createDataFrame(data, f"doc_id {id_type}, text string")
+        for n in (1, 2, 3):
+            arrow = {
+                (r["_id"], r["s"])
+                for r in _distinct_shingle_postings(df, "doc_id", "text", n).collect()
+            }
+            jvm = {
+                (r["doc_id"], r["s"])
+                for r in df.select(
+                    "doc_id",
+                    F.explode(F.array_distinct(_shingles("text", n))).alias("s"),
+                ).collect()
+            }
+            assert arrow == jvm, f"id {id_type}, n={n}"
 
 
 # --------------------------------------------------------------------- eTLD+1
